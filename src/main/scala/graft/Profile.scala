@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler._
-import scala.collection.mutable
-
 /** r17 measurement harness (guide §1): per-JOB wall-time breakdown for a
   * query — how many Spark jobs an invocation schedules, what each costs,
   * and where the time concentrates (many sub-100ms jobs = fixed
@@ -11,48 +8,16 @@ import scala.collection.mutable
   * per-job latency are the first split the optimization round needs
   * before touching any plan.
   *
+  * Every column is written to the `noop` sink: count() prunes final
+  * projections, so projection-only costs (e.g. the N-Triples escape)
+  * would be invisible to it.
+  *
   * Usage: sbt "runMain graft.Profile <sfDir> <query> [query...]"
-  * Prints, per query: warmed total, job count, sum of job times, and
-  * the top jobs with their stage/task counts. Measurement-only — never
-  * run by the driver, changes no query. */
+  * Prints, per query: warmed total, job count, sum of job times, the
+  * driver gap (wall time no job covers), and the top jobs with their
+  * stage/task counts. Measurement-only — never run by the driver,
+  * changes no query. */
 object Profile {
-
-  private final class JobListener extends SparkListener {
-    final case class Job(id: Int, var submitted: Long = 0L,
-        var completed: Long = 0L, var stages: Int = 0, var tasks: Int = 0,
-        var desc: String = "")
-    val jobs = mutable.LinkedHashMap[Int, Job]()
-    val stageTasks = mutable.HashMap[Int, Int]()
-    val stageToJob = mutable.HashMap[Int, Int]()
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      val j = Job(e.jobId, submitted = e.time)
-      j.stages = e.stageInfos.size
-      j.desc = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-      e.stageIds.foreach(stageToJob(_) = e.jobId)
-      jobs(e.jobId) = j
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-      jobs.get(e.jobId).foreach(_.completed = e.time)
-    }
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      synchronized {
-        val si = e.stageInfo
-        stageToJob.get(si.stageId).foreach { jid =>
-          jobs.get(jid).foreach(_.tasks += si.numTasks)
-        }
-      }
-    def reset(): Unit = synchronized { jobs.clear(); stageTasks.clear(); stageToJob.clear() }
-  }
-
-  /** LiveListenerBus.waitUntilEmpty is private[spark]; reflective call
-    * (the BandCapSweep technique) so job-end events land before reads. */
-  private def drainBus(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus): Unit
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Profile <sfDir> <query> [query...]")
     val sfDir = args(0)
@@ -60,33 +25,19 @@ object Profile {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.create("graft-profile", cpus)
     val fns = Queries.queries
-    val listener = new JobListener
-    spark.sparkContext.addSparkListener(listener)
-    // SPARK_GRAFT_PROFILE_ACTION=foreach executes FULL rows (the Verify/
-    // stress render path) instead of count() — count prunes final
-    // projections, so projection-only costs (e.g. the N-Triples escape)
-    // are invisible to it (guide §1.4). Measurement-only knob.
-    val action: org.apache.spark.sql.DataFrame => Unit =
-      if (sys.env.get("SPARK_GRAFT_PROFILE_ACTION").contains("foreach"))
-        df => df.foreach(_ => ())
-      else df => { df.count(); () }
+    val metrics = RunMetrics.attach(spark)
+    def run(name: String): Unit =
+      fns(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
     names.foreach { name =>
       require(fns.contains(name), s"unknown query $name")
       // warmup (JIT + substrates), same lifecycle as Bench
-      try action(fns(name)(spark, sfDir)) catch { case e: Throwable =>
+      try run(name) catch { case e: Throwable =>
         println(s"[profile] $name warmup failed: $e"); }
-      drainBus(spark)
-      listener.reset()
-      val t0 = System.nanoTime()
-      action(fns(name)(spark, sfDir))
-      val wall = (System.nanoTime() - t0) / 1e9
-      drainBus(spark)
-      val jobs = listener.jobs.values.toSeq
-      val jobSum = jobs.map(j => (j.completed - j.submitted).max(0L)).sum / 1e3
-      println(f"\n== $name%s wall=$wall%.3fs jobs=${jobs.size}%d jobSum=$jobSum%.3fs gap=${wall - jobSum}%.3fs")
-      jobs.sortBy(j => -(j.completed - j.submitted)).take(14).foreach { j =>
-        val ms = (j.completed - j.submitted).max(0L)
-        println(f"  job ${j.id}%3d ${ms / 1e3}%7.3fs stages=${j.stages}%2d tasks=${j.tasks}%4d ${j.desc.take(60)}%s")
+      val (wall, snap) = metrics.measure(RunMetrics.secs(run(name)))
+      val jobSum = snap.jobs.map(_.millis).sum / 1e3
+      println(f"\n== $name%s wall=$wall%.3fs jobs=${snap.jobs.size}%d jobSum=$jobSum%.3fs gap=${wall - snap.jobUnionSecs}%.3fs")
+      snap.jobs.sortBy(-_.millis).take(14).foreach { j =>
+        println(f"  job ${j.id}%3d ${j.millis / 1e3}%7.3fs stages=${j.stages}%2d tasks=${j.tasks}%4d ${j.desc.take(60)}%s")
       }
       spark.catalog.clearCache()
     }

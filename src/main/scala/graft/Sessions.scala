@@ -52,15 +52,9 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
-    // memory-regime overrides (SpillSweep) and other main-specific conf;
-    // must land before getOrCreate since they configure the context.
-    // SPARK_GRAFT_CONF ("k=v;k=v") is the local-iteration escape hatch
-    // for flags the mains don't parametrize (e.g. flipping
-    // spark.graft.joinPlanner.enabled in a bench A/B); the driver never
-    // sets it, so recorded rounds always run the defaults.
-    val envConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    // env conf and main-specific conf must land before getOrCreate since
+    // they can configure the context (the spill regime's memory
+    // fractions, see StressSweep)
     val spark = (envConf ++ extraConf).foldLeft(builder) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()
@@ -72,4 +66,22 @@ object Sessions {
     graft.functions.Porter.register(spark)
     spark
   }
+
+  /** `SPARK_GRAFT_CONF` ("k=v;k=v"), applied at session build time: the
+    * way to run a main under a session or context setting it does not
+    * parametrize (a memory regime, a bandCap rung, a planner flag in a
+    * bench A/B). Unset in recorded bench runs, so those run the
+    * defaults; every sweep artifact stamps these pairs as `env_conf`. */
+  def envConf: Seq[(String, String)] =
+    sys.env.get("SPARK_GRAFT_CONF").map(parseConf).getOrElse(Seq.empty)
+
+  /** Splits "k=v;k=v" on ';' and each entry on its first '=', so a value
+    * may itself contain '='. An entry without a key fails loudly: a
+    * dropped typo would silently run the defaults. */
+  private[graft] def parseConf(s: String): Seq[(String, String)] =
+    s.split(";").map(_.trim).filter(_.nonEmpty).toSeq.map { kv =>
+      val i = kv.indexOf('=')
+      require(i > 0, s"SPARK_GRAFT_CONF entry not k=v: $kv")
+      (kv.take(i).trim, kv.drop(i + 1).trim)
+    }
 }

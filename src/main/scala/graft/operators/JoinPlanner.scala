@@ -67,7 +67,7 @@ object JoinPlanner {
         * first measured on the r2 blocking self-join at sf10 (~2000×
         * fan-out): hinted 69-75 s vs unhinted sort-merge 48-63 s.
         * The CONSTANT is placed by the round-15 fixed-output-mass
-        * ladder (graft.FanoutSweep; STRESS_fanout_r15.json at 32M
+        * ladder (graft.Ladders fanout; STRESS_fanout_r15.json at 32M
         * output rows, confirmed at 4× mass in
         * STRESS_fanout_r15_m128.json): the hint wins-or-ties through
         * fan-out 32 (ratio 0.85-1.03 across both masses) and loses
