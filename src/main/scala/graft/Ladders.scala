@@ -148,12 +148,12 @@ object Ladders {
     def rung(name: String, cap: Option[Long]): JField = {
       spark.conf.set("spark.graft.bandCap", cap.getOrElse(1000000000L).toString)
       val drops0 = DedupQueries.guardDropCount.get()
-      // clearCache drops each pass's internal substrates, so every pass
-      // (and the untimed jobs below) starts from the same cold cache
-      val (secs, snap) = metrics.warmMinOfTwo { () =>
-        DedupQueries.minhashVerified(base).foreach(_ => ())
-        spark.catalog.clearCache()
-      }
+      // clearCache, untimed, drops each pass's internal substrates, so
+      // every pass (and the untimed jobs below) starts from the same
+      // cold cache
+      val (secs, snap) = metrics.warmMinOfTwo(
+        () => DedupQueries.minhashVerified(base).foreach(_ => ()),
+        () => spark.catalog.clearCache())
       // each of the three passes drops the same buckets
       val dropped = (DedupQueries.guardDropCount.get() - drops0) / 3
       val pairs = DedupQueries.minhashVerified(base)
@@ -184,7 +184,7 @@ object Ladders {
         f"peakExec=${snap.peakExecMem / 1e6}%.0fMB")
       name -> (("verify_secs" -> Artifact.num(secs)) ~ ("good_pairs" -> goodPairs) ~
         ("false_pairs" -> falsePairs) ~ ("cand_pairs" -> cand) ~
-        ("dropped_buckets" -> dropped) ~ JObject(snap.spillFields) ~
+        ("dropped_buckets" -> dropped) ~ JObject(snap.spillFields()) ~
         ("tiers" -> JObject(perTier.map { case (t, caught, g) =>
           s"t$t" -> (("members" -> tiers(t)._1) ~
             ("recall_milli" -> caught * 1000 / tierSizes(t)) ~
@@ -278,7 +278,7 @@ object Ladders {
         ("recall_milli" -> caught * 1000 / nPlantedStream) ~
         ("caught" -> caught) ~ ("false_dups" -> falseDups) ~
         ("cand_pairs" -> candPairs) ~ ("dead_buckets" -> deadBuckets) ~
-        JObject(snap.spillFields))
+        JObject(snap.spillFields()))
     }
 
     val rungs = caps.map(c => rung(c.toString, Some(c))) :+ rung("uncapped", None)

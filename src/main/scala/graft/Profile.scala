@@ -35,6 +35,8 @@ object Profile {
         println(s"[profile] $name warmup failed: $e"); }
       val (wall, snap) = metrics.measure(RunMetrics.secs(run(name)))
       val jobSum = snap.jobs.map(_.millis).sum / 1e3
+      if (!snap.drained)
+        println(s"[profile] $name: listener bus did not drain; jobs may be missing")
       println(f"\n== $name%s wall=$wall%.3fs jobs=${snap.jobs.size}%d jobSum=$jobSum%.3fs gap=${wall - snap.jobUnionSecs}%.3fs")
       snap.jobs.sortBy(-_.millis).take(14).foreach { j =>
         println(f"  job ${j.id}%3d ${j.millis / 1e3}%7.3fs stages=${j.stages}%2d tasks=${j.tasks}%4d ${j.desc.take(60)}%s")

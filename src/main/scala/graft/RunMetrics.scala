@@ -17,8 +17,10 @@ import org.json4s.jackson.JsonMethods
   *
   * Listener events arrive asynchronously, so reads go through
   * [[measure]]: it drains the bus before resetting and again before
-  * snapshotting, and a snapshot covers exactly the jobs of its body. */
-final class RunMetrics private (spark: SparkSession) extends SparkListener {
+  * snapshotting, and a snapshot covers exactly the jobs of its body —
+  * unless a drain timed out, which the snapshot records. */
+final class RunMetrics private (spark: SparkSession, drainTimeoutMillis: Long)
+    extends SparkListener {
   import RunMetrics._
 
   private val jobs = mutable.LinkedHashMap[Int, Job]()
@@ -50,37 +52,50 @@ final class RunMetrics private (spark: SparkSession) extends SparkListener {
       }
     }
 
-  /** Blocks until the listener bus has delivered every posted event.
-    * `LiveListenerBus.waitUntilEmpty` is `private[spark]` (public in
-    * bytecode), hence the reflection. */
-  def drain(): Unit = {
+  /** Blocks until the listener bus has delivered every posted event, or
+    * for at most `drainTimeoutMillis`; false if the bus did not empty (a
+    * GC-starved queue, a zombie job still posting, a stopped context).
+    * Never throws on a busy bus: a multi-hour sweep must outlive one
+    * late event. `LiveListenerBus.waitUntilEmpty` is `private[spark]`
+    * (public in bytecode), hence the reflection. */
+  def drain(): Boolean = {
     val sc = spark.sparkContext
     val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus): Unit
+    try {
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+        .invoke(bus, Long.box(drainTimeoutMillis))
+      true
+    } catch { case _: java.lang.reflect.InvocationTargetException => false }
   }
 
   /** Runs `body` and returns its result with the metrics of exactly the
     * jobs it ran. */
   def measure[T](body: => T): (T, Snapshot) = {
-    drain()
+    val before = drain()
     synchronized {
       jobs.clear(); stageToJob.clear()
       memSpilled = 0L; diskSpilled = 0L; peakExecMem = 0L; spillStages = 0
     }
     val result = body
-    drain()
+    val after = drain()
     synchronized {
       (result, Snapshot(jobs.values.toList, memSpilled, diskSpilled,
-        spillStages, peakExecMem))
+        spillStages, peakExecMem, drained = before && after))
     }
   }
 
   /** One warm-up pass (JIT, codegen, shuffle files), then the faster of
-    * two timed passes. The snapshot covers the two timed passes and is
-    * taken before the caller runs any untimed job. */
-  def warmMinOfTwo(pass: () => Unit): (Double, Snapshot) = {
-    pass()
-    measure(math.min(secs(pass()), secs(pass())))
+    * two timed passes; `reset` runs after every pass, outside its timer.
+    * The snapshot covers the two timed passes and is taken before the
+    * caller runs any untimed job. */
+  def warmMinOfTwo(pass: () => Unit, reset: () => Unit = () => ())
+      : (Double, Snapshot) = {
+    pass(); reset()
+    measure {
+      val a = secs(pass()); reset()
+      val b = secs(pass()); reset()
+      math.min(a, b)
+    }
   }
 
   def detach(): Unit = spark.sparkContext.removeSparkListener(this)
@@ -92,8 +107,11 @@ object RunMetrics {
     def millis: Long = (completed - submitted).max(0L)
   }
 
+  /** `drained` is false when a drain timed out: the counters may then
+    * hold an earlier body's stages or miss some of this one's. */
   final case class Snapshot(jobs: Seq[Job], memSpilled: Long,
-      diskSpilled: Long, spillStages: Int, peakExecMem: Long) {
+      diskSpilled: Long, spillStages: Int, peakExecMem: Long,
+      drained: Boolean) {
     /** Seconds during which at least one job ran: the union of the job
       * intervals, so overlapping jobs count once. */
     def jobUnionSecs: Double = jobs.map(j => (j.submitted, j.submitted + j.millis))
@@ -101,15 +119,24 @@ object RunMetrics {
         if (e <= end) (sum, end) else (sum + e - math.max(s, end), e)
       }._1 / 1e3
 
-    def spillFields: List[JField] = List(
+    /** The spill and peak fields, plus `metrics_tainted` when they may
+      * hold stages of another body: a drain timed out, or the caller
+      * knows of a live zombie job. */
+    def spillFields(tainted: Boolean = !drained): List[JField] = List(
       "mem_spilled_bytes" -> JLong(memSpilled),
       "disk_spilled_bytes" -> JLong(diskSpilled),
       "spill_stages" -> JInt(spillStages),
-      "peak_exec_mem_bytes" -> JLong(peakExecMem))
+      "peak_exec_mem_bytes" -> JLong(peakExecMem)) ++
+      (if (tainted) List("metrics_tainted" -> JBool(true)) else Nil)
   }
 
-  def attach(spark: SparkSession): RunMetrics = {
-    val m = new RunMetrics(spark)
+  /** Bound of one [[RunMetrics.drain]]: three times Spark's own 10 s
+    * default, so a GC-pressured bus still empties. */
+  val DrainTimeoutMillis = 30000L
+
+  def attach(spark: SparkSession,
+      drainTimeoutMillis: Long = DrainTimeoutMillis): RunMetrics = {
+    val m = new RunMetrics(spark, drainTimeoutMillis)
     spark.sparkContext.addSparkListener(m)
     m
   }

@@ -14,8 +14,7 @@ import org.apache.spark.sql.SparkSession
   * of TIMESTAMP_NTZ, which unix_micros/window() reject.
   */
 object Sessions {
-  def create(appName: String, cpus: String,
-      extraConf: Map[String, String] = Map.empty): SparkSession = {
+  def create(appName: String, cpus: String): SparkSession = {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
@@ -52,10 +51,9 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
-    // env conf and main-specific conf must land before getOrCreate since
-    // they can configure the context (the spill regime's memory
-    // fractions, see StressSweep)
-    val spark = (envConf ++ extraConf).foldLeft(builder) {
+    // env conf must land before getOrCreate since it can configure the
+    // context (the spill regime's memory fractions, see StressSweep)
+    val spark = envConf.foldLeft(builder) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

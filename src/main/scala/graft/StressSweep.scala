@@ -56,7 +56,7 @@ import org.json4s.JsonDSL._
 object StressSweep {
   final private[graft] case class Res(secs: Double, status: String,
       note: String, guardDrops: Long, dropsTainted: Boolean,
-      metrics: RunMetrics.Snapshot)
+      metrics: RunMetrics.Snapshot, metricsTainted: Boolean)
 
   /** Keys whose sf1/sf0.1 ratio is super-linear BY CONTRACT — the note
     * rides the artifact so a round-over-round ratio diff reads the why
@@ -144,7 +144,8 @@ object StressSweep {
     * after every key. */
   private[graft] def sweep(spark: org.apache.spark.sql.SparkSession,
       sfDir: String, keys: Seq[QueryDef], timeoutSecs: Long,
-      outJson: Option[String], baseline: Map[String, Double])
+      outJson: Option[String], baseline: Map[String, Double],
+      drainTimeoutMillis: Long = RunMetrics.DrainTimeoutMillis)
       : Seq[(String, Res)] = {
     // env + corpus stamp: a sweep's seconds are only comparable to a
     // prior artifact's under the same heap/threads/conf AND the same
@@ -164,7 +165,7 @@ object StressSweep {
       val rows = results.map { case (name, r) =>
         name -> (JObject(
           ("secs" -> Artifact.num(r.secs)) :: ("status" -> JString(r.status)) ::
-            r.metrics.spillFields) ~
+            r.metrics.spillFields(r.metricsTainted)) ~
           ("ratio" -> baseline.get(name).filter(_ > 0)
             .map(b => Artifact.num(r.secs / b, 2))) ~
           ("iso_secs" -> isoSecs.get(name).map(s => Artifact.num(s))) ~
@@ -179,20 +180,24 @@ object StressSweep {
         ("queries" -> JObject(rows.toList)))
     }
 
-    val metrics = RunMetrics.attach(spark)
+    val metrics = RunMetrics.attach(spark, drainTimeoutMillis)
     try {
       // zombie futures: timed-out queries whose future did not drain in
-      // its 60 s window keep mutating the process-global guardDropCount —
-      // while any is live, later keys' drop deltas are flagged tainted
-      // instead of silently misattributed
+      // its 60 s window keep running jobs and mutating the process-global
+      // guardDropCount — while any is live, later keys' drop deltas and
+      // spill/peak fields are flagged tainted instead of silently
+      // misattributed
       var zombies = List.empty[Future[String]]
       var results = Vector.empty[(String, Res)]
       keys.foreach { q =>
         zombies = zombies.filterNot(_.isCompleted)
-        val t0 = System.nanoTime()
+        val zombieAtStart = zombies.nonEmpty
         val drops0 = DedupQueries.guardDropCount.get()
         val group = s"sweep-${q.name}"
-        val ((status, note), snap) = metrics.measure {
+        // timed inside measure: `secs` covers the query and its
+        // clearCache, not the listener drains around them
+        val ((status, note, secs), snap) = metrics.measure {
+          val t0 = System.nanoTime()
           val fut = Future {
             spark.sparkContext.setJobGroup(group, q.name, interruptOnCancel = true)
             try { q.fn(spark, sfDir).foreach(_ => ()); "ok" }
@@ -227,19 +232,24 @@ object StressSweep {
           // down) must not abort the loop before the artifact is
           // rewritten; clearCache on a stopped context throws
           try spark.catalog.clearCache() catch { case _: Throwable => () }
-          outcome
+          (outcome._1, outcome._2, (System.nanoTime() - t0) / 1e9)
         }
-        val secs = (System.nanoTime() - t0) / 1e9
         val drops = DedupQueries.guardDropCount.get() - drops0
-        val tainted = drops > 0 && zombies.exists(!_.isCompleted)
+        val zombieLive = zombieAtStart || zombies.exists(!_.isCompleted)
+        val tainted = drops > 0 && zombieLive
+        val metricsTainted = zombieLive || !snap.drained
         val extra = (if (drops > 0) s"  [guard drops: $drops" +
             (if (tainted) ", TAINTED by a live zombie future]" else "]")
+          else "") +
+          (if (metricsTainted) "  [metrics TAINTED: " +
+            (if (zombieLive) "live zombie future]" else "listener drain timed out]")
           else "") +
           (if (note.nonEmpty) s"  $note" else "")
         println(f"[sweep] ${q.name}%-28s $secs%7.2f s  $status  " +
           f"spill=${(snap.memSpilled + snap.diskSpilled) / 1e6}%.0fMB " +
           f"peakExec=${snap.peakExecMem / 1e6}%.0fMB$extra")
-        results :+= q.name -> Res(secs, status, note, drops, tainted, snap)
+        results :+= q.name -> Res(secs, status, note, drops, tainted, snap,
+          metricsTainted)
         writeArtifact(results, Map.empty)
       }
       // isolated re-measurement of ratio-flag suspects — the manual

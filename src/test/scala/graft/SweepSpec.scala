@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
@@ -63,10 +65,43 @@ class SweepSpec extends AnyFunSuite {
           "peak_exec_mem_bytes").foreach { f =>
           assert((q \ f).isInstanceOf[JInt], s"$name.$f")
         }
+        assert((q \ "metrics_tainted") == JNothing, name)
       }
       // the listener saw the keys' stages: aggregations reserve execution memory
       assert(queries.exists { case (_, q) =>
         (q \ "peak_exec_mem_bytes").asInstanceOf[JInt].num > 0 })
     } finally Files.deleteIfExists(out)
+  }
+  test("a listener drain that times out taints the key's metrics, not the sweep") {
+    val keys = Seq("q1_agg", "q4_region_rollup").map(n => Queries.all.find(_.name == n).get)
+    // holds the listener bus at its first job end until released, so
+    // every drain of the sweep outlasts its bound
+    val release = new CountDownLatch(1)
+    val stall = new SparkListener {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+        release.await(60, TimeUnit.SECONDS); ()
+      }
+    }
+    val out = Files.createTempFile("stress-sweep", ".json")
+    spark.sparkContext.addSparkListener(stall)
+    try {
+      val results = StressSweep.sweep(spark, TestSpark.sf, keys,
+        timeoutSecs = 120, outJson = Some(out.toString), baseline = Map.empty,
+        drainTimeoutMillis = 50)
+      assert(results.map(_._2.status) == Seq("ok", "ok"))
+      assert(results.forall { case (_, r) => r.metricsTainted && !r.metrics.drained })
+      val queries = (JsonMethods.parse(Files.readString(out)) \ "queries")
+        .asInstanceOf[JObject].obj
+      assert(queries.map(_._1) == List("q1_agg", "q4_region_rollup"))
+      queries.foreach { case (name, q) =>
+        assert((q \ "metrics_tainted") == JBool(true), name)
+      }
+    } finally {
+      // release first: removing a queue's last listener joins its
+      // dispatch thread, which must not be parked in the stall
+      release.countDown()
+      spark.sparkContext.removeSparkListener(stall)
+      Files.deleteIfExists(out)
+    }
   }
 }
