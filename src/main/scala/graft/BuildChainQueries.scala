@@ -12,7 +12,7 @@ import graft.operators.Substrate.SubstrateOps
   * Stage map (reference lifecycle):
   *   1. map          — entity + relationship substrate (`run-reconcile.py:109-148`:
   *                     acquire/map producing records + their references)
-  *   2. reconcile    — `operators.Reconcile.fixpoint` (reconciler.py:34-125):
+  *   2. reconcile    — `operators.Reconcile.frontierFixpoint` (reconciler.py:34-125):
   *                     the collector crawl + name pass repeated to fixpoint
   *   3. idmap CC     — `operators.Graph.connectedComponents` over the
   *                     equivalence subset (reference_manager.py:212-407)
@@ -27,8 +27,8 @@ import graft.operators.Substrate.SubstrateOps
   * scalar (edge count / changed-label count); the merge fold is a single
   * groupByKey(yuid) shuffle with clusters folding independently; the
   * export is map-only explode+concat. The idmap join in stage 4 is a
-  * key-equi join against a table bounded by the reconciled entity count —
-  * broadcast-able when the build slice is small, shuffle-hash otherwise.
+  * key-equi join against a table bounded by the reconciled entity count;
+  * AQE broadcasts it when the build slice is small.
   * Nothing in the chain collects data to the driver.
   *
   * Fixture semantics (deterministic, oracle-replayable):
@@ -55,38 +55,6 @@ object BuildChainQueries extends QueryGroup {
   /** Cleaned merged-cluster row carried from the fold into the export. */
   final case class ChainMerged(yuid: Long, primary_name: String,
       idents: Seq[String], eqs: Seq[String], cls: Seq[String], ts: String)
-
-  /** The reference-rewrite GATHER — the run-merge.py:105-168 analog:
-    * every reference (lineitem's part→supplier pairs here) rewritten
-    * through the idmap-derived members table — executed through
-    * [[operators.JoinPlanner.planJoin]] (round-14 verdict item 2:
-    * j16b proved the CMS-driven decision in isolation; this adopts it
-    * in the heaviest real join the build chain owns). The STAGED
-    * planner sketches the bounded members side first (one map-side
-    * pass over a table persisted upstream) and takes the broadcast
-    * exit without scanning the probe — on every fixture scale the
-    * build's reach-bounded members side fits the budget, so the
-    * audited plan pins BroadcastHashJoin, the gather probe is never
-    * shuffled, and the estimate overhead is one tiny pass (an eager
-    * both-sides sketch cost ~2× on the bench key — the staged shape
-    * exists because of that measurement). If a 100-TB build slice ever
-    * outgrew the budget, the same call sketches the probe and degrades
-    * to shuffle-hash (or salts a hot reference key) without a code
-    * change — GatherPlanSpec pins all three shapes on uniform and
-    * skewed inputs.
-    *
-    * Config flag `spark.graft.joinPlanner.enabled` (default true,
-    * runtime-settable) reverts to the plain Catalyst-chosen join — the
-    * rollback lever a production adoption ships with. Both inputs
-    * carry the join key as `k`. */
-  private[graft] def gatherRefs(refs: DataFrame, members: DataFrame,
-      cfg: operators.JoinPlanner.Config = operators.JoinPlanner.Config())
-      : DataFrame = {
-    val plannerOn = operators.JoinPlanner.enabled(refs.sparkSession)
-    if (plannerOn) operators.JoinPlanner.planJoinStaged(refs, members, cfg)._1
-    else refs.join(members, "k")
-  }
-
 
   def laBuildPipeline(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -161,9 +129,14 @@ object BuildChainQueries extends QueryGroup {
       .select($"pk", $"p_name",
         shiftright(coalesce($"component", $"pk" * 8L + 2L) - 2L, 3).as("yuid"))
       .persistSubstrate() // read twice: merge input + relationship rewrite
-    val suppliedBy = gatherRefs(
-      li.select($"l_partkey".cast("long").as("k"), $"l_suppkey".cast("long").as("sk")),
-      members.select($"pk".as("k"), $"yuid"))
+    // the reference-rewrite gather (run-merge.py:105-168): every
+    // reference (lineitem's part→supplier pairs) rewritten through the
+    // members table. A plain equi-join: AQE broadcasts the
+    // reach-bounded members side at runtime and splits a skewed
+    // reference key's partition when it does not fit
+    val suppliedBy = li.select($"l_partkey".cast("long").as("pk"),
+        $"l_suppkey".cast("long").as("sk"))
+      .join(members.select($"pk", $"yuid"), "pk")
       .select($"yuid", $"sk").distinct()
 
     // ── stages 5+6: merge_order-sorted fold (LaMerge) + Cleaner per cluster

@@ -142,13 +142,13 @@ object GraphQueries extends QueryGroup {
       |UNION ALL SELECT seed, node, 1 FROM d1
       |UNION ALL SELECT seed, node, 2 FROM d2""".stripMargin
 
-  /** J6: the reconcile fixpoint end-to-end — Reconcile.fixpoint driven
-    * by two data-backed reconcilers until the equivalence-edge set
-    * stops growing (`reconciler.py:34-125`: the URI/name passes plus
-    * the collector crawl, repeated until `issubset`):
-    *   crawl — every relationship edge whose subject already appears
-    *           in the current edge set (the collector pass);
-    *   name  — for part nodes in the set, an edge to the minimum
+  /** J6: the reconcile fixpoint end-to-end — Reconcile.frontierFixpoint
+    * driven by two data-backed node-anchored expanders until no new node
+    * appears (`reconciler.py:34-125`: the URI/name passes plus the
+    * collector crawl, repeated until `issubset`):
+    *   crawl — every relationship edge whose subject is a frontier
+    *           node (the collector pass);
+    *   name  — for part nodes in the frontier, an edge to the minimum
     *           partkey sharing their lowercase name (the name pass).
     * Seeded with customers 1-5 → their orders, the closure walks
     * orders → parts → name-twins → suppliers → nations over several
@@ -157,8 +157,8 @@ object GraphQueries extends QueryGroup {
     * forward-reachable from the seed nodes.
     *
     * Scale: each round is one distributed semi-join against the
-    * (bucketable) relationship table; per round ONE scalar (the edge
-    * count) reaches the driver — g1's convergence discipline. */
+    * (bucketable) relationship table; per round ONE scalar (the
+    * new-node count) reaches the driver — g1's convergence discipline. */
   def reconcileFixpoint(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // RAW edge unions — no distinct — PERSISTED: the fixpoint dedups

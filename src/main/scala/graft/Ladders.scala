@@ -14,21 +14,16 @@ import org.json4s.JsonDSL._
   *     (STRESS_bandcap_r16.json).
   *   - `neardupcap`: the streaming admission cap
   *     `StreamQueries.NeardupCapC` (STRESS_neardupcap_r16.json).
-  *   - `fanout`: the knee behind `JoinPlanner.Config.shuffleHashMaxFanout`
-  *     (STRESS_fanout_r15.json).
   *
-  * Usage: runMain graft.Ladders <bandcap|neardupcap|fanout> [outJson] [outputMassRows]
-  * (`outputMassRows` is read by `fanout` only.)
+  * Usage: runMain graft.Ladders <bandcap|neardupcap> [outJson]
   */
 object Ladders {
   def main(args: Array[String]): Unit = {
     val ladder: (SparkSession, RunMetrics) => JObject = args.headOption match {
       case Some("bandcap") => bandCap
       case Some("neardupcap") => neardupCap
-      case Some("fanout") =>
-        fanout(_, _, args.lift(2).map(_.toLong).getOrElse(32000000L))
       case _ => throw new IllegalArgumentException(
-        "usage: Ladders <bandcap|neardupcap|fanout> [outJson] [outputMassRows]")
+        "usage: Ladders <bandcap|neardupcap> [outJson]")
     }
     val name = args(0)
     val spark = Sessions.create(s"graft-$name-ladder",
@@ -286,58 +281,5 @@ object Ladders {
       ("tiers" -> tiers.map { case (cm, sm, n) =>
         ("corpus_members" -> cm) ~ ("stream_members" -> sm) ~ ("clusters" -> n) }) ~
       ("caps" -> JObject(rungs.toList))
-  }
-
-  /** The constant was first set from ONE measurement at ~2000× fan-out
-    * (r2's blocking self-join at sf10); this ladder maps the crossover.
-    *
-    * Fixed OUTPUT MASS: for fan-out F both sides carry F rows per key
-    * over K = OUT/F² keys, so every rung emits exactly OUT join rows and
-    * the only variable is the per-key pair amplification (the thing the
-    * knob gates). Each rung times hinted SHUFFLE_HASH vs unhinted (which
-    * resolves to sort-merge under preferSortMergeJoin). Broadcast is
-    * disabled so neither arm collapses into a broadcast join, and the
-    * executed join operator is recorded from the plan so a rung can
-    * never silently measure the wrong strategy. */
-  private def fanout(spark: SparkSession, metrics: RunMetrics,
-      outMass: Long): JObject = {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    val fanouts = Seq(8L, 32L, 64L, 128L, 512L, 2048L)
-
-    def side(f: Long, keys: Long, col2: String) =
-      spark.range(keys * f).select(
-        (col("id") % keys).as("k"),
-        (col("id") * 7L % 1000003L).as(col2))
-
-    def time(f: Long, hinted: Boolean): (Double, String) = {
-      val keys = math.max(1L, outMass / (f * f))
-      val l = side(f, keys, "a")
-      val r = side(f, keys, "b")
-      val j = if (hinted) l.join(r.hint("SHUFFLE_HASH"), "k") else l.join(r, "k")
-      val plan = j.queryExecution.executedPlan.toString
-      val op =
-        if (plan.contains("ShuffledHashJoin")) "shuffled_hash"
-        else if (plan.contains("SortMergeJoin")) "sort_merge"
-        else "other"
-      (metrics.warmMinOfTwo { () => j.count(); () }._1, op)
-    }
-
-    val rows = fanouts.map { f =>
-      val (hs, hop) = time(f, hinted = true)
-      val (us, uop) = time(f, hinted = false)
-      println(f"[fanout] F=$f%-5d hinted($hop)=$hs%7.2f s  " +
-        f"unhinted($uop)=$us%7.2f s  ratio=${hs / us}%5.2f")
-      (f, hs, hop, us, uop)
-    }
-    // the knee: largest rung where the hint still wins (or ties within 5%)
-    val knee = rows.takeWhile { case (_, hs, _, us, _) => hs <= us * 1.05 }
-      .lastOption.map(_._1).getOrElse(-1L)
-    println(s"[fanout] knee (largest hint-wins rung): $knee")
-    ("output_mass_rows" -> outMass) ~ ("knee_hint_wins_upto" -> knee) ~
-      ("rungs" -> JObject(rows.map { case (f, hs, hop, us, uop) =>
-        f.toString -> (("hinted_secs" -> Artifact.num(hs)) ~ ("hinted_op" -> hop) ~
-          ("unhinted_secs" -> Artifact.num(us)) ~ ("unhinted_op" -> uop))
-      }.toList))
   }
 }

@@ -42,44 +42,21 @@ object OpsQueries extends QueryGroup {
       |    ELSE date_trunc('day', o_orderdate) END) AS BIGINT) AS epoch_begin
       |FROM orders""".stripMargin
 
-  /** The name-index probe join executed through the CMS-driven planner
-    * — the THIRD production adoption (after the build chain's gather
-    * and r2's blocking self-join): candidate-vs-name-index is the
-    * reference's hottest hand-sharded key class (AAT en names 820k,
-    * `reconciler.py:66-75`), and a hot name ("john smith" class) is
-    * exactly the skew the salt branch exists for. STAGED estimate:
-    * the index (build) is counted first and the broadcast exit taken
-    * without a probe pass — at small scales this reproduces the
-    * pre-adoption explicit broadcast; past the budget the full
-    * broadcast/shuffle/salt decision runs. Flag-off reverts to the
-    * pre-adoption plan (explicit broadcast), NOT a bare join — the
-    * rollback must restore the exact round-13 physical shape.
-    * NameReconcilePlanSpec pins the branches. */
-  private[graft] def indexJoin(probe: DataFrame, index: DataFrame,
-      cfg: operators.JoinPlanner.Config = operators.JoinPlanner.Config())
-      : DataFrame = {
-    val plannerOn = operators.JoinPlanner.enabled(probe.sparkSession)
-    if (plannerOn) operators.JoinPlanner.planJoinStaged(probe, index, cfg)._1
-    else probe.join(broadcast(index), "k")
-  }
-
   /** K4+J1+W7: index-backed exact-name reconciliation. The index maps
     * (lowercased name, brand-as-type) -> canonical id (deterministic
     * min — the cluster-winner rule); every part resolves through it.
-    * Same-type requirement mirrors reconciler.py:222. The composite
-    * (name, type) key rides as one `k` column (\u0001-joined — neither
-    * field can contain it) so the planner sketches the true pair key;
-    * the join executes through [[indexJoin]] (round-15 adoption). */
+    * Same-type requirement mirrors reconciler.py:222. A plain
+    * equi-join on (name, type): AQE broadcasts the index at runtime,
+    * and a hot name (the "john smith" class, the reference's
+    * hand-sharded AAT names, `reconciler.py:66-75`) gets its partition
+    * split by the skew join. */
   def nameReconcile(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val parts = Tables.load(spark, dir, "part")
     val index = parts.groupBy(lower($"p_name").as("key"), $"p_brand".as("itype"))
       .agg(min($"p_partkey").as("canonical"), count(lit(1)).as("n_cluster"))
-      .select(concat_ws("\u0001", $"key", $"itype").as("k"),
-        $"canonical", $"n_cluster")
-    val probe = parts.select(
-      concat_ws("\u0001", lower($"p_name"), $"p_brand").as("k"), $"p_partkey")
-    indexJoin(probe, index)
+    parts.select(lower($"p_name").as("key"), $"p_brand".as("itype"), $"p_partkey")
+      .join(index, Seq("key", "itype"))
       .select($"p_partkey", $"canonical", $"n_cluster")
   }
   private val nameReconcileOracle: String =
@@ -307,15 +284,15 @@ object OpsQueries extends QueryGroup {
     * same-name pairs score 100. Threshold 900 → real CC over matches →
     * per-record cluster id + size.
     *
-    * Scale shape: the self-join is keyed on the blocking key and
-    * (round 14) executes through [[blockingJoin]] — the CMS planner's
-    * broadcast/shuffle/salt decision, so a hot blocking key salts
-    * instead of sticking a reducer (the d2 guardedBandPairs cap remains
-    * the remedy when the hot block's OUTPUT itself is the problem); the
-    * score is codegen'd column arithmetic; CC is the g1 operator. The
-    * oracle replays ground truth directly from the fixture arithmetic —
-    * a hash match proves blocking+scoring+clustering recovered exactly
-    * the planted matches and nothing else.
+    * Scale shape: the self-join is a plain equi-join on the blocking
+    * key, so AQE broadcasts a small record table and splits a hot
+    * blocking key's partition instead of sticking a reducer (the d2
+    * guardedBandPairs cap remains the remedy when the hot block's
+    * OUTPUT itself is the problem); the score is codegen'd column
+    * arithmetic; CC is the g1 operator. The oracle replays ground truth
+    * directly from the fixture arithmetic — a hash match proves
+    * blocking+scoring+clustering recovered exactly the planted matches
+    * and nothing else.
     *
     * Fixture precondition: two DIFFERENT entities collide on name AND
     * city AND street only when their custkeys differ by a multiple of
@@ -323,26 +300,6 @@ object OpsQueries extends QueryGroup {
     * holds for custkey domains below ~2.7M (any test sf here; ~sf 18
     * on TPC-H scaling). Beyond that, widen the moduli with the
     * fixture. */
-  /** The blocking self-join executed through the CMS-driven planner —
-    * the SECOND production adoption (after the build chain's gather):
-    * blocking keys are exactly where real ER skews (a common surname
-    * blocks a measurable share of the corpus), and the planner's salt
-    * branch is the remedy the reference reaches by hand-sharding its
-    * reconcile keys (`run-reconcile.py:33-41`). STAGED estimate: the
-    * build side (the same persisted recs) is sketched first and the
-    * broadcast exit taken at fixture scales without a probe pass; past
-    * the budget the probe is sketched and the full
-    * broadcast/shuffle/salt decision runs. Same rollback flag as the
-    * gather (`spark.graft.joinPlanner.enabled`); both inputs carry the
-    * blocking key as `k`; ErBlockingPlanSpec pins the branches. */
-  private[graft] def blockingJoin(lhs: DataFrame, rhs: DataFrame,
-      cfg: operators.JoinPlanner.Config = operators.JoinPlanner.Config())
-      : DataFrame = {
-    val plannerOn = operators.JoinPlanner.enabled(lhs.sparkSession)
-    if (plannerOn) operators.JoinPlanner.planJoinStaged(lhs, rhs, cfg)._1
-    else lhs.join(rhs, "k")
-  }
-
   def erPipeline(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ck = $"c_custkey".cast("long")
@@ -359,7 +316,7 @@ object OpsQueries extends QueryGroup {
     val recs = recsA.union(recsB).persistSubstrate() // blocking join + final label join
     val lhs = recs.select($"nm".as("k"), $"rid".as("ra"), $"city".as("ca"), $"street".as("sa"))
     val rhs = recs.select($"nm".as("k"), $"rid".as("rb"), $"city".as("cb"), $"street".as("sb"))
-    val scored = blockingJoin(lhs, rhs).filter($"ra" < $"rb")
+    val scored = lhs.join(rhs, "k").filter($"ra" < $"rb")
       .select($"ra", $"rb",
         (lit(100L) + when($"ca" === $"cb", 500L).otherwise(0L)
           + when($"sa" === $"sb", 400L).otherwise(0L)).as("score_milli"))

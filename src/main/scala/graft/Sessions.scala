@@ -67,7 +67,7 @@ object Sessions {
 
   /** `SPARK_GRAFT_CONF` ("k=v;k=v"), applied at session build time: the
     * way to run a main under a session or context setting it does not
-    * parametrize (a memory regime, a bandCap rung, a planner flag in a
+    * parametrize (a memory regime, a bandCap rung, an AQE setting in a
     * bench A/B). Unset in recorded bench runs, so those run the
     * defaults; every sweep artifact stamps these pairs as `env_conf`. */
   def envConf: Seq[(String, String)] =

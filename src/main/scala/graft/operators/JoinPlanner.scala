@@ -10,10 +10,14 @@ import org.apache.spark.sql.functions._
   * output size and its hottest key's output mass, and pick the physical
   * strategy a human would: broadcast a small build side, salt a skewed
   * probe, plain shuffle otherwise. The two-phase shape (estimate action
-  * → plan choice → execution) is exactly AQE's runtime re-plan, done
-  * here at the operator level where the decision can also pick SALTING
-  * — which AQE's skew-join handles only for sort-merge, not for the
-  * hinted shuffle-hash joins the engine prefers for narrow build sides.
+  * → plan choice → execution) is AQE's runtime re-plan done at the
+  * operator level, where the decision is visible as data: the
+  * registered s21/j16b family replays it bit-exactly against DuckDB.
+  * The production joins (the build chain's reference gather, r1's
+  * name-index join, r2's blocking self-join) do NOT run through it:
+  * they are plain equi-joins, and AQE's runtime broadcast and skew-join
+  * split make the same calls without this pre-pass, whose extra driver
+  * jobs the overhead-bound builds pay for (CHANGES.md records the A/B).
   *
   * Estimator math (AMS '96 / Cormode-Muthukrishnan '05, the s21 rows):
   *   est  = min_j Σ_b L_j[b]·R_j[b]  ≥ Σ_k l(k)·r(k)   (true join size)
@@ -32,25 +36,6 @@ import org.apache.spark.sql.functions._
   * same call from data, per join. */
 object JoinPlanner {
 
-  /** Rollback flag for the three production adoption sites (gather,
-    * ER blocking, name-index join). Default ON. */
-  val EnabledKey = "spark.graft.joinPlanner.enabled"
-
-  /** Defensive flag parse (advice r15): the old per-site
-    * `.forall(_.toBoolean)` threw a bare IllegalArgumentException from
-    * String.toBoolean inside query-plan construction on any value other
-    * than true/false (e.g. "1", "on", a typo). Accept case-insensitive
-    * true/false, treat unset as true, and reject anything else with an
-    * error that names the key and the bad value. */
-  def enabled(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.getOption(EnabledKey) match {
-      case None => true
-      case Some(v) if v.equalsIgnoreCase("true")  => true
-      case Some(v) if v.equalsIgnoreCase("false") => false
-      case Some(v) => throw new IllegalArgumentException(
-        s"$EnabledKey must be true or false, got: '$v'")
-    }
-
   /** Deployment thresholds (the autoBroadcastJoinThreshold /
     * skewJoin.skewedPartitionFactor analogs, in rows and milli-share;
     * fixtures scale them down with their data). */
@@ -58,39 +43,7 @@ object JoinPlanner {
       broadcastMaxRows: Long = 100000L,
       skewShareMilli: Long = 200L,
       saltTargetPartitions: Int = 32,
-      maxSalt: Int = 32,
-      /** Above this average per-probe-row match count the Shuffle
-        * strategy drops its SHUFFLE_HASH hint and lets Catalyst pick
-        * (sort-merge): a pair-amplifying join replays each key group
-        * per probe row, and SMJ's buffered group is a SEQUENTIAL
-        * scan where the hash join walks a per-key chain of pointers —
-        * first measured on the r2 blocking self-join at sf10 (~2000×
-        * fan-out): hinted 69-75 s vs unhinted sort-merge 48-63 s.
-        * The CONSTANT is placed by the round-15 fixed-output-mass
-        * ladder (graft.Ladders fanout; STRESS_fanout_r15.json at 32M
-        * output rows, confirmed at 4× mass in
-        * STRESS_fanout_r15_m128.json): the hint wins-or-ties through
-        * fan-out 32 (ratio 0.85-1.03 across both masses) and loses
-        * monotonically from 64 up (1.05-1.30 at 64 → 1.26-1.62 at
-        * 512-2048) — the knee sits exactly between the rungs this
-        * default separates. Physical-plan detail only: the DECISION
-        * stays `shuffle`, so the j16b oracle replay is untouched.
-        *
-        * Mass-conditioned refinement CONSIDERED AND DECLINED (round-16
-        * decision, per the r15 verdict's "decide or record why not"):
-        * the 128M-mass ladder shows the hint never strictly winning at
-        * that mass (ratios 1.02-1.03 at fan-out 8-32 — measurement
-        * noise, not a loss), while at 32M it wins 15% at the same
-        * rungs. A mass bound above which the hint is dropped would
-        * therefore buy ≤3% in the worst observed case at the cost of a
-        * second estimated quantity (output mass) feeding a
-        * plan-switching rule — more surface for a mis-estimate to flip
-        * a plan than the bounded downside justifies. Knee-only stands;
-        * revisit only if a production key regresses with fan-out ≤ 32
-        * AND output mass ≥ 10^8 (then condition on
-        * `Estimate.outRows`, already computed). Data:
-        * STRESS_fanout_r15.json / STRESS_fanout_r15_m128.json. */
-      shuffleHashMaxFanout: Long = 32L)
+      maxSalt: Int = 32)
 
   /** Never-undercount bounds from the per-side CMS cell grids. */
   final case class Estimate(nLeft: Long, nRight: Long,
@@ -119,42 +72,16 @@ object JoinPlanner {
       lit(graft.functions.VecMath.bj(64 + j)), lit(HashP)), lit(CmsW))
   }
 
-  /** Per-side CMS cell grid over the `k` column: (row j, bucket, n).
-    * A non-numeric key (string blocking keys — the r2 adoption) is
-    * pre-reduced through xxhash64 before the pairwise-hash rows; the
-    * numeric path is untouched, so the j16b/s21 oracle replays stay
-    * bit-identical. Estimator guarantees are unchanged: xxhash64 is a
-    * deterministic key→int64 map, and any collision only MERGES two
-    * true keys' masses — overcount, the direction CMS already errs. */
+  /** Per-side CMS cell grid over the numeric `k` column: (row j,
+    * bucket, n). */
   private[graft] def cells(s: DataFrame): DataFrame = {
     import graft.TextQueries.CmsD
     val sp = s.sparkSession
     import sp.implicits._
-    val kNum =
-      if (s.schema("k").dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]) $"k"
-      else xxhash64($"k")
     s.select(explode(array((0 until CmsD).map(j =>
-        struct(lit(j).as("row"), bucket(j, kNum).as("bucket"))): _*)).as("c"))
+        struct(lit(j).as("row"), bucket(j, $"k").as("bucket"))): _*)).as("c"))
       .groupBy($"c.row".as("row"), $"c.bucket".as("bucket"))
       .agg(count(lit(1)).as("n"))
-  }
-
-  /** Side row count from the grid itself (row 0's cells partition the
-    * input), not a second scan; sum not count — the count()
-    * projection-pruning trap. */
-  private def rowsOf(c: DataFrame): Long = c.filter(col("row") === 0)
-    .agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0)
-
-  /** Join-size / hot-key bounds from two persisted cell grids. */
-  private def boundsOf(lc: DataFrame, rc: DataFrame): (Long, Long) = {
-    val b = lc.as("a").join(rc.as("b"), Seq("row", "bucket"))
-      .groupBy(col("row"))
-      .agg(sum(col("a.n") * col("b.n")).as("ip"),
-        max(col("a.n") * col("b.n")).as("mx"))
-      .agg(coalesce(min(col("ip")), lit(0L)).as("est"),
-        coalesce(min(col("mx")), lit(0L)).as("hot"))
-      .head()
-    (b.getLong(0), b.getLong(1))
   }
 
   /** Sketch both sides (each must carry a `k` join-key column) and
@@ -169,10 +96,19 @@ object JoinPlanner {
     try {
       lc = cells(left).persist()
       rc = cells(right).persist()
-      val nl = rowsOf(lc)
-      val nr = rowsOf(rc)
-      val (est, hot) = boundsOf(lc, rc)
-      Estimate(nl, nr, est, hot)
+      // side row count from the grid itself (row 0's cells partition
+      // the input), not a second scan; sum not count — the count()
+      // projection-pruning trap
+      def rowsOf(c: DataFrame): Long = c.filter(col("row") === 0)
+        .agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0)
+      val b = lc.as("a").join(rc.as("b"), Seq("row", "bucket"))
+        .groupBy(col("row"))
+        .agg(sum(col("a.n") * col("b.n")).as("ip"),
+          max(col("a.n") * col("b.n")).as("mx"))
+        .agg(coalesce(min(col("ip")), lit(0L)).as("est"),
+          coalesce(min(col("mx")), lit(0L)).as("hot"))
+        .head()
+      Estimate(rowsOf(lc), rowsOf(rc), b.getLong(0), b.getLong(1))
     } finally {
       if (lc != null) lc.unpersist()
       if (rc != null) rc.unpersist()
@@ -221,29 +157,14 @@ object JoinPlanner {
       : (DataFrame, Strategy, Estimate) = {
     val e = estimate(left, right)
     val s = choose(e, cfg)
-    (execute(left, right, e, s, cfg), s, e)
+    (execute(left, right, e, s), s, e)
   }
 
-  /** Average matches emitted per PROBE row — the pair-amplification
-    * signal behind the Shuffle hint choice (see Config). The probe is
-    * the left/first argument by the planJoin/planJoinStaged convention
-    * (execute hints the smaller side as the hash build, so the probe is
-    * what streams). Dividing by max(nLeft, nRight) — the pre-r15 form —
-    * underestimated the fan-out exactly when the probe was the smaller
-    * side, keeping the hint on the pair-amplifying joins the
-    * shuffleHashMaxFanout knob exists to catch (round-14 advice). */
-  private def fanout(e: Estimate): Long =
-    if (e.estRows > 0 && e.nLeft > 0) e.estRows / e.nLeft else 0L
-
   private def execute(left: DataFrame, right: DataFrame, e: Estimate,
-      s: Strategy, cfg: Config): DataFrame = s match {
+      s: Strategy): DataFrame = s match {
     case Broadcast =>
       if (e.nRight <= e.nLeft) left.join(broadcast(right), "k")
       else broadcast(left).join(right, "k")
-    case Shuffle if fanout(e) > cfg.shuffleHashMaxFanout =>
-      // pair-amplifying join: no hint — Catalyst's sort-merge replays
-      // each buffered key group sequentially (see Config scaladoc)
-      left.join(right, "k")
     case Shuffle =>
       if (e.nRight <= e.nLeft) left.join(right.hint("SHUFFLE_HASH"), "k")
       else left.hint("SHUFFLE_HASH").join(right, "k")
@@ -254,49 +175,5 @@ object JoinPlanner {
       val sr = right.withColumn("salt",
         explode(array((0 until r).map(i => lit(i.toLong)): _*)))
       sl.join(sr.hint("SHUFFLE_HASH"), Seq("k", "salt")).drop("salt")
-  }
-
-  /** [[planJoin]] with a STAGED estimate for the production gather
-    * shape, where the caller knows which side is the candidate build
-    * (bounded / persisted — cheap to sketch) and which is the large
-    * probe (a fact-table scan — expensive to sketch): sketch the BUILD
-    * side alone first and take the broadcast exit without ever scanning
-    * the probe. Only when the build outgrows the broadcast budget —
-    * exactly the regime where a heavy join follows and a pre-pass pays
-    * for itself — is the probe sketched for the full skew decision.
-    * Estimate-then-choose with the estimate cost proportional to how
-    * much is at stake. When the broadcast exit fires, the returned
-    * Estimate carries the probe-side fields as -1 (not sketched). */
-  def planJoinStaged(probe: DataFrame, build: DataFrame,
-      cfg: Config = Config()): (DataFrame, Strategy, Estimate) = {
-    // the broadcast exit needs ONE scalar — the build's row count — so
-    // take it with a bare codegen count, not the d×w sketch grid (the
-    // r2-adoption bench A/B measured the grid-for-a-count pre-pass at
-    // ~10% of the key; the count is noise). Past the budget the build
-    // is re-scanned for its grid: one extra cheap pass, paid exactly
-    // when a heavy shuffle join follows and the full decision is due.
-    val nb = build.count()
-    if (nb <= cfg.broadcastMaxRows) {
-      val e = Estimate(-1L, nb, -1L, -1L)
-      (probe.join(broadcast(build), "k"), Broadcast, e)
-    } else {
-      // persists inside the try (same leak rationale as estimate): if
-      // cells(probe)/persist throws, bc must still be unpersisted
-      var bc: DataFrame = null
-      var pc: DataFrame = null
-      try {
-        bc = cells(build).persist()
-        pc = cells(probe).persist()
-        val np = rowsOf(pc)
-        val (est, hot) = boundsOf(pc, bc)
-        val e = Estimate(np, nb, est, hot)
-        val s = choose(e, cfg)
-        (execute(probe, build, e, s, cfg), s, e)
-      } finally {
-        if (pc != null) pc.unpersist()
-        if (bc != null) bc.unpersist()
-        ()
-      }
-    }
   }
 }

@@ -48,7 +48,17 @@ object Reconcile {
     * re-distincted the full edge set every round (O(rounds × total)),
     * which is the difference between a BFS and re-crawling the whole
     * graph per round at 100 TB. One scalar (new-node count) reaches
-    * the driver per round; lineage is cut with localCheckpoint. */
+    * the driver per round; lineage is cut with localCheckpoint.
+    *
+    * Contract on expanders: node-anchored, hence EMPTY IN → EMPTY OUT —
+    * an empty node set must yield no edges. The loop relies on it: it
+    * expands two layers per driver round-trip and evaluates the second
+    * layer without checking whether the first added any node. An
+    * expander that emits edges on an empty frontier breaks the contract,
+    * and then those edges (and their dst nodes) enter the closure
+    * whenever a round pair's first layer comes back empty, where a
+    * one-layer loop would have stopped; with maxIter = 1 (the
+    * single-layer tail only) they do not. */
   def frontierFixpoint(seed: DataFrame,
       expanders: Seq[DataFrame => DataFrame],
       maxIter: Int = 50): DataFrame = {
@@ -81,11 +91,11 @@ object Reconcile {
         // checkpoint, so ONE count materializes both layers — half the
         // per-layer driver scalar barriers of the one-layer loop. The
         // closure is unchanged: the frontier sequence f1, f2 is exactly
-        // the one-layer loop's, and when f1 is empty the node-anchored
-        // contract makes e2/f2 empty (expanding an empty node set
-        // produces no edges), so stopping on n2 == 0 alone stops at the
-        // same layer set. An odd maxIter falls through to the single-
-        // layer tail below, so the layer COUNT bound is also unchanged.
+        // the one-layer loop's, and an empty f1 gives an empty f2 by the
+        // expander contract (header), so stopping on n2 == 0 alone stops
+        // at the same layer set. An odd maxIter falls through to the
+        // single-layer tail below, so the layer COUNT bound is also
+        // unchanged.
         val seen1 = seen.union(f1) // disjoint by anti-join
         val (e2, f2) = layer(f1, seen1)
         val n2 = f2.count() // the round-pair's single driver scalar

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-level lint pinning the round-16 cache regime (operators/
@@ -29,33 +27,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CacheRegimeLintSpec extends AnyFunSuite {
 
-  private val root: Path = {
-    // tests fork with cwd = repo root, but don't assume it
-    val cand = Seq(Paths.get("src/main/scala/graft"),
-      Paths.get(sys.props("user.dir"), "src/main/scala/graft"))
-    cand.find(Files.isDirectory(_)).getOrElse(
-      fail(s"cannot locate src/main/scala/graft from ${sys.props("user.dir")}"))
-  }
-
-  private def scalaSources: Seq[Path] = {
-    val s = Files.walk(root)
-    try s.iterator().asScala.filter(p =>
-      p.toString.endsWith(".scala") && Files.isRegularFile(p)).toSeq
-    finally s.close()
-  }
-
-  /** (file, line#, line) for every code occurrence of `pat`; comment
-    * and scaladoc lines (prose mentioning the API) don't count. */
+  /** (file, line#, line) for every code occurrence of `pat`. */
   private def hits(pat: String): Seq[(String, Int, String)] =
-    scalaSources.flatMap { p =>
-      val rel = root.relativize(p).toString
-      Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (line, i)
-            if line.contains(pat) &&
-              !line.trim.startsWith("*") && !line.trim.startsWith("//") &&
-              !line.trim.startsWith("/*") =>
-          (rel, i + 1, line.trim)
-      }
+    MainSources.codeLines.collect {
+      case (f, i, line) if line.contains(pat) => (f, i, line.trim)
     }
 
   private val allowedBarePersist = Set(

@@ -108,21 +108,4 @@ class JoinPlannerSpec extends AnyFunSuite {
     val plain = dupL.join(bigR, "k").agg(count(lit(1)), sum($"v")).head()
     assert(dj.agg(count(lit(1)), sum($"v")).head() === plain)
   }
-
-  test("enabled: unset/true/false parse; a bad value names key + value") {
-    // advice r15: the old per-site .forall(_.toBoolean) threw a bare
-    // IllegalArgumentException from String.toBoolean on "1"/"on"/typos
-    spark.conf.unset(JoinPlanner.EnabledKey)
-    assert(JoinPlanner.enabled(spark))
-    try {
-      spark.conf.set(JoinPlanner.EnabledKey, "TRUE")
-      assert(JoinPlanner.enabled(spark))
-      spark.conf.set(JoinPlanner.EnabledKey, "False")
-      assert(!JoinPlanner.enabled(spark))
-      spark.conf.set(JoinPlanner.EnabledKey, "1")
-      val e = intercept[IllegalArgumentException](JoinPlanner.enabled(spark))
-      assert(e.getMessage.contains(JoinPlanner.EnabledKey) &&
-        e.getMessage.contains("'1'"))
-    } finally spark.conf.unset(JoinPlanner.EnabledKey)
-  }
 }

@@ -112,6 +112,25 @@ class ReconcileSpec extends AnyFunSuite {
     assert(Reconcile.frontierFixpoint(seed, Seq(noop)).count() === 1)
   }
 
+  test("frontierFixpoint: edges emitted on an empty frontier enter the closure (documented)") {
+    import spark.implicits._
+    // breaks empty-in → empty-out: one constant edge exactly when the
+    // frontier it is handed is empty
+    val onEmpty: DataFrame => DataFrame = ns =>
+      Seq((100L, 101L)).toDF("src", "dst")
+        .crossJoin(ns.agg(count(lit(1)).as("n")))
+        .filter($"n" === 0L).select("src", "dst")
+    val seed = Seq((1L, 2L)).toDF("src", "dst")
+    def closure(maxIter: Int): Set[(Long, Long)] =
+      Reconcile.frontierFixpoint(seed, Seq(onEmpty), maxIter)
+        .as[(Long, Long)].collect().toSet
+    // the first layer adds no node, the pair's second layer expands the
+    // empty frontier, and its edge is kept
+    assert(closure(50) === Set((1L, 2L), (100L, 101L)))
+    // the single-layer tail stops on the empty first layer
+    assert(closure(1) === Set((1L, 2L)))
+  }
+
   test("lux compiler rejects fields and predicates outside the catalog") {
     val c = new graft.plans.LuxCompiler(
       LuxQueries.entities(spark, TestSpark.sf),
