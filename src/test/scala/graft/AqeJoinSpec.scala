@@ -37,7 +37,29 @@ class AqeJoinSpec extends AnyFunSuite {
     (rows, plans.collect(plan) { case j: ShuffledJoin if j.isSkewJoin => j }.size)
   }
 
-  test("er blocking: AQE splits a 90%-hot key; rows equal the unsplit join") {
+  /** Collects `df` with broadcast off and the skew thresholds at 1 KiB:
+    * asserts its final plan splits exactly one join as skewed, and that
+    * its rows equal the same query with `skewJoin.enabled=false`, whose
+    * plan splits none. `df` is by-name so each run plans afresh under the
+    * conf in force. Returns the rows. */
+  private def assertSkewSplit(df: => DataFrame): Seq[Row] =
+    withConf(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1024",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1024") {
+      val (split, nSplit) = runSkewJoins(df)
+      assert(nSplit === 1, "the hot key was not split")
+      val (plain, nPlain) =
+        withConf("spark.sql.adaptive.skewJoin.enabled" -> "false") {
+          runSkewJoins(df)
+        }
+      assert(nPlain === 0)
+      assert(split === plain)
+      split
+    }
+
+  test("er blocking: AQE splits a hot blocking key; rows equal the unsplit join") {
     import spark.implicits._
     // r2's blocking shape: 90% of records share the key "smith"
     val recs = (1 to 600).map { i =>
@@ -46,27 +68,44 @@ class AqeJoinSpec extends AnyFunSuite {
     }.toDF("rid", "k", "city", "street")
     val lhs = recs.select($"k", $"rid".as("ra"), $"city".as("ca"), $"street".as("sa"))
     val rhs = recs.select($"k", $"rid".as("rb"), $"city".as("cb"), $"street".as("sb"))
-    // a def: each run plans afresh under the conf in force
-    def blocked = lhs.join(rhs, "k").filter($"ra" < $"rb")
+    val rows = assertSkewSplit(lhs.join(rhs, "k").filter($"ra" < $"rb")
       .agg(count(lit(1)), sum($"ra" * 1000L + $"rb"),
         sum(when($"ca" === $"cb", 1L).otherwise(0L)),
-        sum(when($"sa" === $"sb", 1L).otherwise(0L)))
-    withConf(
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1024",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1024") {
-      val (split, nSplit) = runSkewJoins(blocked)
-      assert(nSplit === 1, "the hot blocking key was not split")
-      val (plain, nPlain) =
-        withConf("spark.sql.adaptive.skewJoin.enabled" -> "false") {
-          runSkewJoins(blocked)
-        }
-      assert(nPlain === 0)
-      assert(split === plain)
-      // 540 hot records pair up C(540, 2) ways, plus the cold blocks
-      assert(split.head.getLong(0) >= 540L * 539 / 2)
-    }
+        sum(when($"sa" === $"sb", 1L).otherwise(0L))))
+    // 540 hot records pair up C(540, 2) ways, plus the cold blocks
+    assert(rows.head.getLong(0) >= 540L * 539 / 2)
+  }
+
+  test("gather: AQE splits a hot-keyed probe; rows equal the unsplit join") {
+    import spark.implicits._
+    // the build chain's gather shape: part→supplier references, 90% on
+    // part 7, rewritten through a one-row-per-part members table
+    val refs = (1 to 2000).map { i =>
+      (if (i % 10 < 9) 7L else (i % 50).toLong, (i * 13 % 997).toLong)
+    }.toDF("pk", "sk")
+    val members = (0L until 50L).map(pk => (pk, pk / 5)).toDF("pk", "yuid")
+    val rows = assertSkewSplit(refs.join(members, "pk")
+      .agg(count(lit(1)), sum($"yuid" * 1000L + $"sk")))
+    assert(rows.head.getLong(0) === 2000L)
+  }
+
+  test("name reconcile: AQE splits a hot name; rows equal the unsplit join") {
+    import spark.implicits._
+    // r1's index-join shape: parts probed on (name, brand), 90% on one
+    // (name, brand) pair, against a one-row-per-(key, itype) canonical
+    // index. One hot pair, not two: with shuffle partitions at the core
+    // count, two hot partitions would make the median itself hot
+    val probe = (1 to 2000).map { i =>
+      if (i % 10 < 9) ("almond", "b0", i.toLong)
+      else (s"nm${i % 40}", s"b${i % 2}", i.toLong)
+    }.toDF("key", "itype", "p_partkey")
+    val index = (Seq("almond") ++ (0 until 40).map(j => s"nm$j"))
+      .flatMap(nm => Seq("b0", "b1").map(b => (nm, b, s"$nm/$b", nm.length.toLong)))
+      .toDF("key", "itype", "canonical", "n_cluster")
+    val rows = assertSkewSplit(probe.join(index, Seq("key", "itype"))
+      .agg(count(lit(1)), sum($"p_partkey" * $"n_cluster"),
+        sum(length($"canonical"))))
+    assert(rows.head.getLong(0) === 2000L)
   }
 
   test("r1, r2, la_build: equal digests under defaults, AQE off, 1 shuffle partition") {
